@@ -130,7 +130,7 @@ final class Pipeline(
   private val started =
     scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
 
-  private def track(q: StreamingQuery): StreamingQuery =
+  private[graft] def track(q: StreamingQuery): StreamingQuery =
     synchronized { started += q; q }
 
   /** Start all four units (reference: main.py:24-44). */
@@ -145,11 +145,16 @@ final class Pipeline(
     try spark.streams.awaitAnyTermination()
     finally stopAll()
 
-  /** Stop every query this pipeline started (and only those). */
+  /** Stop every query this pipeline started (and only those). A query
+    * whose stop fails is logged by name and does not keep the rest running.
+    */
   def stopAll(): Unit = synchronized {
     started.foreach { q =>
       try q.stop()
-      catch { case _: Throwable => () }
+      catch {
+        case e: Throwable =>
+          println(s"[pipeline] stopping query ${q.name} (${q.id}) failed: $e")
+      }
     }
     started.clear()
   }

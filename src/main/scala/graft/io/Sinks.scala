@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 
 import graft.config.{JdbcConfig, PipelineConfig}
@@ -15,6 +15,17 @@ import graft.ops.AlertPayload
   * silently drops data). With checkpoints + append-mode JDBC writes the
   * pipeline is at-least-once into idempotent-keyed tables; duplicates on
   * retry are possible and documented, loss is not.
+  *
+  * One action per micro-batch (A5 + K6): each `foreachBatch` body runs
+  * the sink's own write and nothing before it — no emptiness probe, no
+  * `count()` for the log (the reference counts every batch twice, SURVEY
+  * §2.9.5). A probe is a second Spark job over the same frame; on the
+  * aggregator it re-ran the stateful reduce and re-committed every state
+  * store. An empty batch is written like any other: Spark's JDBC writer
+  * skips an empty partition before opening a connection, so what an empty
+  * batch costs is the driver-side table lookup (and, on first use, the
+  * CREATE TABLE). Per-batch row counts are `StreamingQueryProgress
+  * .numInputRows`, not log lines.
   */
 object Sinks {
 
@@ -23,6 +34,8 @@ object Sinks {
     * data_agregator.py:28-47). Connection-per-partition is Spark's JDBC
     * writer behavior; at high fan-in bound writer parallelism upstream
     * with `coalesce` on the BATCH frame if the database is the bottleneck.
+    * An empty partition opens no connection; the driver still looks the
+    * table up (and creates it on first use) once per call.
     */
   def jdbcAppend(df: DataFrame, jdbc: JdbcConfig, table: String): Unit =
     df.write
@@ -35,17 +48,13 @@ object Sinks {
       .mode(SaveMode.Append)
       .save()
 
-  /** A5 + K6: the per-batch guard and diagnostics. `isEmpty` scans at most
-    * one partition-row, unlike the reference's double `count()`
-    * (SURVEY §2.9.5).
-    */
-  private def nonEmpty(df: DataFrame, batchId: Long, what: String): Boolean =
-    if (df.isEmpty) { log(s"[batch $batchId] no $what to write"); false }
-    else true
-
   private def log(msg: String): Unit = println(msg)
 
-  /** Wrap a stream in a checkpointed foreachBatch JDBC append (K1/K3). */
+  /** Wrap a stream in a checkpointed foreachBatch JDBC append (K1/K3).
+    * `writer` is the batch's only action, empty batches included: on the
+    * aggregator that one run of the stateful plan is also what commits
+    * every state-store partition.
+    */
   def jdbcStream(
       stream: DataFrame,
       jdbc: JdbcConfig,
@@ -60,7 +69,7 @@ object Sinks {
       .outputMode("append")
       .option("checkpointLocation", s"$checkpoint/$queryName")
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        if (nonEmpty(df, batchId, table)) write(df, table)
+        write(df, table)
       }
       .start()
   }
@@ -156,8 +165,7 @@ object Sinks {
       .outputMode("append")
       .option("checkpointLocation", s"$checkpoint/$queryName")
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        if (nonEmpty(df, batchId, table))
-          idempotentBatchWriter(jdbc, table)(df, batchId)
+        idempotentBatchWriter(jdbc, table)(df, batchId)
       }
       .start()
 
@@ -171,7 +179,8 @@ object Sinks {
     * two writes, and both sinks share one checkpointed offset log. Write
     * order is JDBC then Kafka: a failure between the two re-runs the batch,
     * re-appending to JDBC (at-least-once) rather than ever publishing an
-    * alert that was not persisted.
+    * alert that was not persisted. The two writes are the batch's only
+    * actions: an empty batch reaches both writers as an empty frame.
     *
     * @param writeJdbc  batch writer (default: real JDBC append); injectable
     *                   so tests can collect
@@ -199,14 +208,12 @@ object Sinks {
       .outputMode("append")
       .option("checkpointLocation", s"${cfg.checkpointRoot}/alerts_dual_sink")
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        if (nonEmpty(df, batchId, "alerts")) {
-          df.persist()
-          try {
-            jdbcW(df)
-            kafkaW(AlertPayload.toKafka(df))
-            log(s"[batch $batchId] wrote alerts to jdbc+kafka")
-          } finally df.unpersist()
-        }
+        df.persist()
+        try {
+          jdbcW(df)
+          kafkaW(AlertPayload.toKafka(df))
+          log(s"[batch $batchId] wrote alerts to jdbc+kafka")
+        } finally df.unpersist()
       }
       .start()
   }
@@ -225,7 +232,10 @@ object Sinks {
   /** K5 stream half: mailable alerts → notifier. The collect() is the one
     * deliberate driver-side hop in the engine, and it is BOUNDED: at most
     * [[MaxEmailsPerBatch]] rows cross to the driver regardless of batch
-    * size (limit runs on the executors before the collect).
+    * size (limit runs on the executors before the collect). That collect
+    * is also the emptiness test, so no probe runs in front of it; only a
+    * full collect pays a second action, the `count()` that sizes an alert
+    * storm.
     */
   def notifierSink(
       mailableAlerts: DataFrame,
@@ -240,18 +250,17 @@ object Sinks {
       .outputMode("append")
       .option("checkpointLocation", cp)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        if (nonEmpty(df, batchId, "mailable alerts")) {
-          val sent = df.limit(MaxEmailsPerBatch).collect()
-          sent.foreach { row: Row =>
-            notifier.send(AlertEmail.fromAlertRow(row, recipient))
-          }
-          if (sent.length == MaxEmailsPerBatch) {
-            val total = df.count()
-            if (total > MaxEmailsPerBatch)
-              log(s"[batch $batchId] ALERT STORM: $total mailable alerts, " +
-                s"capped at $MaxEmailsPerBatch emails, " +
-                s"${total - MaxEmailsPerBatch} dropped")
-          }
+        val sent = df.limit(MaxEmailsPerBatch).collect()
+        if (sent.isEmpty) log(s"[batch $batchId] no mailable alerts")
+        sent.foreach { row: Row =>
+          notifier.send(AlertEmail.fromAlertRow(row, recipient))
+        }
+        if (sent.length == MaxEmailsPerBatch) {
+          val total = df.count()
+          if (total > MaxEmailsPerBatch)
+            log(s"[batch $batchId] ALERT STORM: $total mailable alerts, " +
+              s"capped at $MaxEmailsPerBatch emails, " +
+              s"${total - MaxEmailsPerBatch} dropped")
         }
       }
       .start()
@@ -281,9 +290,4 @@ object Sinks {
   def console(stream: DataFrame, numRows: Int = 20): DataStreamWriter[Row] =
     stream.writeStream.format("console")
       .option("numRows", numRows).outputMode("append")
-
-  /** Micro-batch trigger shared by the pipeline queries; the reference uses
-    * the default as-fast-as-possible trigger, kept here as the default.
-    */
-  def defaultTrigger: Trigger = Trigger.ProcessingTime(0L)
 }

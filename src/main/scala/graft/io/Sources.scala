@@ -43,10 +43,6 @@ object Sources {
       .option("failOnDataLoss", "false")
       .load()
 
-  /** Batch parquet reader for the oracle/test harness. */
-  def parquetTable(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   /** Batch JSONL reader for the reference's sensor payloads: one JSON
     * document per line, pushed through the SAME permissive parse chain as
     * live Kafka traffic (`Parse.jsonToReadings`), so a dump of raw

@@ -83,9 +83,6 @@ object Dedup {
   def baseHash30Array(arr: Column): Column =
     graft.functions.HashArray.hashArray(arr, (1L << 30) - 1)
 
-  def affineAt(params: (Long, Long), h: Column): Column =
-    pmod(h * params._1 + params._2, lit(AffineMod))
-
   /** (doc_id, grams): each document's distinct word-BIGRAM shingle set.
     * Bigram shingles (not single words) keep signatures discriminative on
     * corpora with a narrow vocabulary: with word-set shingles every document

@@ -5,6 +5,8 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -32,6 +34,158 @@ class StreamingPipelineSpec extends SparkSpec {
        |"timestamp":"$ts","value":$value,"unit":"$unit",
        |"metadata":{"battery_level":$battery,"signal_strength":$signal}}"""
       .stripMargin.replace("\n", "")
+  }
+
+  /** Counts, per micro-batch of one streaming query, the Spark jobs its
+    * `foreachBatch` body started and the tasks of its stateful
+    * (`StateStoreSave`) stage. Streaming sets the query's run id as the job
+    * group on the stream thread, so every action of the batch carries it.
+    */
+  private final class BatchJobs(runId: String) extends SparkListener {
+    val jobs = mutable.Map[Long, Int]().withDefaultValue(0)
+    val stateTasks = mutable.Map[Long, Int]().withDefaultValue(0)
+    private val statefulStages = mutable.Map[Int, Long]()
+    private val flushed = mutable.Set[String]()
+
+    private def batchOf(p: java.util.Properties): Option[Long] =
+      Option(p).filter(_.getProperty("spark.jobGroup.id") == runId)
+        .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+        .map(_.toLong)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      batchOf(e.properties).foreach(b => jobs(b) += 1)
+      Option(e.properties).flatMap(p => Option(p.getProperty(FlushKey)))
+        .foreach { t => flushed += t; notifyAll() }
+    }
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      synchronized {
+        if (e.stageInfo.rddInfos.exists(
+            _.scope.exists(_.name.startsWith("StateStoreSave"))))
+          batchOf(e.properties).foreach(statefulStages(e.stageInfo.stageId) = _)
+      }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      statefulStages.get(e.stageId).foreach(b => stateTasks(b) += 1)
+    }
+
+    /** Block until every event posted before this call was delivered: a
+      * marker job's start is queued behind them.
+      */
+    def flush(): Unit = {
+      val sc = spark.sparkContext
+      val token = java.util.UUID.randomUUID().toString
+      sc.setLocalProperty(FlushKey, token)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(FlushKey, null)
+      synchronized {
+        val deadline = System.currentTimeMillis() + 30000L
+        while (!flushed(token) && System.currentTimeMillis() < deadline)
+          wait(100L)
+        assert(flushed(token), "listener bus did not drain")
+      }
+    }
+  }
+
+  private val FlushKey = "graft.test.flush"
+
+  /** Run `body` against a started query with a [[BatchJobs]] listening. */
+  private def withBatchJobs(q: org.apache.spark.sql.streaming.StreamingQuery)(
+      body: BatchJobs => Unit): Unit = {
+    val jobs = new BatchJobs(q.runId.toString)
+    spark.sparkContext.addSparkListener(jobs)
+    try body(jobs)
+    finally { spark.sparkContext.removeSparkListener(jobs); q.stop() }
+  }
+
+  test("one action per micro-batch: jdbcStream runs only its writer's job") {
+    import spark.implicits._
+    val input = MemoryStream[String](spark)
+    val pipeline = new Pipeline(spark, cfg)
+    val written = mutable.Buffer[org.apache.spark.sql.Row]()
+    val query = Sinks.jdbcStream(
+      pipeline.readingsFrame(input.toDF()), cfg.jdbc, cfg.jdbc.readingsTable,
+      Files.createTempDirectory("graft-one-action").toString, "one_action",
+      writer = (df, _) => written.synchronized { written ++= df.collect() })
+    withBatchJobs(query) { jobs =>
+      input.addData(readingJson("temperature", 21.5),
+        readingJson("humidity", 40.0))
+      query.processAllAvailable()
+      jobs.flush()
+      assert(written.length === 2)
+      // The writer's collect is the batch's one job; an emptiness probe
+      // in front of it would be a second.
+      assert(jobs.jobs.toMap === Map(0L -> 1), jobs.jobs)
+    }
+  }
+
+  test("one action per micro-batch: the aggregator runs its stateful plan once") {
+    import spark.implicits._
+    val input = MemoryStream[String](spark)
+    val pipeline = new Pipeline(spark, cfg)
+    val emitted = mutable.Buffer[Int]()
+    // Data batches only, so no watermark-only batch can start after the
+    // last processAllAvailable and race the counts.
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(noData, "false")
+    val query = try Sinks.jdbcStream(
+      pipeline.aggregatesFrame(input.toDF()), cfg.jdbc,
+      cfg.jdbc.aggregatesTable,
+      Files.createTempDirectory("graft-one-action-agg").toString,
+      "one_action_agg",
+      writer = (df, _) => emitted.synchronized { emitted += df.collect().length })
+    finally spark.conf.unset(noData)
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    withBatchJobs(query) { jobs =>
+      def at(hhmmss: String) = s"2026-01-01T$hhmmss.000000"
+      input.addData(readingJson("temperature", 20.0, ts = at("12:00:30")),
+        readingJson("humidity", 40.0, ts = at("12:01:00")))
+      query.processAllAvailable()
+      input.addData(readingJson("temperature", 22.0, ts = at("12:09:00")))
+      query.processAllAvailable()
+      // Runs under the 12:08 watermark: both [12:00, 12:04) windows close.
+      input.addData(readingJson("temperature", 23.0, ts = at("12:10:00")))
+      query.processAllAvailable()
+      jobs.flush()
+      assert(emitted.sum === 2, emitted)
+      assert(jobs.jobs.nonEmpty && jobs.jobs.keySet === jobs.stateTasks.keySet)
+      // Every batch — the ones that emit windows included — runs one job
+      // whose stateful stage visits each state-store partition once.
+      jobs.jobs.foreach { case (b, n) =>
+        assert(n === 1, s"batch $b ran $n jobs")
+        assert(jobs.stateTasks(b) === partitions,
+          s"batch $b ran ${jobs.stateTasks(b)} state-store tasks")
+      }
+    }
+  }
+
+  test("stopAll logs a failing stop by query name and still stops the rest") {
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import spark.implicits._
+    val broken = java.lang.reflect.Proxy.newProxyInstance(
+      getClass.getClassLoader, Array(classOf[StreamingQuery]),
+      (_: Any, m: java.lang.reflect.Method, _: Array[AnyRef]) => m.getName match {
+        case "name" => "broken_unit"
+        case "id"   => new java.util.UUID(0L, 1L)
+        case "stop" => throw new java.util.concurrent.TimeoutException("stop timed out")
+        case other  => throw new UnsupportedOperationException(other)
+      }).asInstanceOf[StreamingQuery]
+    val input = MemoryStream[String](spark)
+    val live = input.toDF().writeStream
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft-stop-all").toString)
+      .foreachBatch { (_: DataFrame, _: Long) => () }
+      .start()
+    val pipeline = new Pipeline(spark, cfg)
+    pipeline.track(broken)
+    pipeline.track(live)
+    val out = new java.io.ByteArrayOutputStream()
+    try {
+      Console.withOut(out)(pipeline.stopAll())
+      assert(!live.isActive, "a failing stop must not keep the rest running")
+    } finally live.stop()
+    assert(out.toString.contains("broken_unit"), out.toString)
+    assert(out.toString.contains("stop timed out"), out.toString)
   }
 
   test("alert chain e2e: dual sink writes the same batch to jdbc and kafka") {
@@ -68,7 +222,7 @@ class StreamingPipelineSpec extends SparkSpec {
         Set("A_1_100_temperature", "A_1_100_humidity"))
       assert(kafkaRows.forall(_._2.contains("\"location\":{\"building\":\"A\"")))
 
-      // empty batch: neither writer called again
+      // empty batch: both writers receive an empty frame and add no rows
       val (j0, k0) = (jdbcRows.length, kafkaRows.length)
       input.addData(readingJson("temperature", 22.0))
       query.processAllAvailable()

@@ -200,6 +200,29 @@ class JdbcSinkSpec extends SparkSpec {
     assert(readBack(cfg, cfg.readingsTable + "_commits").count() === 1L)
   }
 
+  test("jdbcStream default writer: an empty first batch writes 0 rows, the next appends") {
+    import spark.implicits._
+    val cfg = derbyCfg()
+    val input = MemoryStream[(String, Double)](spark)
+    // The filter empties the first batch: the sink calls the real writer
+    // on it anyway, which creates the table and opens no partition
+    // connection.
+    val query = Sinks.jdbcStream(
+      input.toDF().toDF("sensor_id", "value").where($"value" > 0),
+      cfg, cfg.readingsTable,
+      checkpoint = Files.createTempDirectory("graft-jdbc-empty").toString,
+      queryName = "jdbc_empty_first")
+    try {
+      input.addData(("s0", -1.0))
+      query.processAllAvailable()
+      assert(readBack(cfg, cfg.readingsTable).count() === 0L)
+      input.addData(("s1", 1.5), ("s2", -2.0))
+      query.processAllAvailable()
+      assert(readBack(cfg, cfg.readingsTable)
+        .select("sensor_id").as[String].collect() === Array("s1"))
+    } finally query.stop()
+  }
+
   test("jdbcStream default writer: stream → real JDBC table → read back") {
     import spark.implicits._
     val cfg = derbyCfg()

@@ -25,13 +25,11 @@ class ComponentsFinishSpec extends AnyFunSuite with SparkSpec {
     val label = scala.collection.mutable.Map[Long, Long]()
     universe.foreach { n =>
       if (!label.contains(n)) {
-        var comp = List(n)
         val seen = scala.collection.mutable.Set(n)
         var frontier = List(n)
         while (frontier.nonEmpty) {
           frontier = frontier.flatMap(adj(_)).filterNot(seen)
           frontier.foreach(seen.add)
-          comp = frontier ++ comp
         }
         val m = seen.min
         seen.foreach(label(_) = m)
